@@ -77,7 +77,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from ..operators.extract import extract_text
+from ..operators.extract import decode_partitions, extract_text
 from ..queries.text_q import _NORM_PASSES
 from ..queries.pipeline_q import _PAT_EMAIL, _PAT_IP, _PAT_PHONE
 from .pipeline import _is_torn_parquet, _sum_digest
@@ -840,12 +840,12 @@ def run_corpus_prep(
     must treat as 'stage never happened'. ``cut_spans`` enables the
     optional ExactSubstr excision stage between dedup_doc and split; the
     flag must match across resume attempts of one --output dir (guarded).
+    ``num_partitions`` overrides the extract stage's decode task count
+    (default: operators/extract.decode_partitions over ``pages``).
 
     Returns {"stages": {name: {...}}, "n_docs": int, "wall_s": float}.
     """
     t_job = time.monotonic()
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
 
     # flag-stability guards: committed state must agree with cut_spans
     cut_lin = _read_stage_lineage(out_dir, "cut_spans")
@@ -943,7 +943,8 @@ def run_corpus_prep(
     else:
         if pages is None:
             raise ValueError("extract stage uncommitted and pages=None")
-        ext = extract_text(pages, num_partitions=num_partitions)
+        ext = extract_text(pages, num_partitions=(
+            num_partitions or decode_partitions(pages)))
         staged = ext.select("url", "warc_ts", "lang", "doc_kind", "text",
                             F.col("text_sha256").alias("text_sha"), "error")
         prev_docs, prev_n = _commit_docs_stage("extract", staged, n_in=None)

@@ -179,6 +179,92 @@ def test_salted_repartition_balances_oversized_tail(spark):
     assert max(loads) < 0.21 * total, loads
 
 
+def _lineage_rows(out_dir):
+    import pyarrow.parquet as pq
+    return pq.read_table(f"{out_dir}/lineage").num_rows
+
+
+@pytest.fixture(scope="module")
+def pages_parquet(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("pages") / "pages.parquet")
+    pages.pages_df(spark, 200, partitions=2).write.parquet(path)
+    return path
+
+
+def test_default_decode_partitions_from_input(spark, pages_parquet,
+                                              tmp_path_factory):
+    """A small input gets one decode task per core: the default run
+    commits exactly defaultParallelism lineage rows, with the same output
+    as an explicit-count run."""
+    base = str(tmp_path_factory.mktemp("defparts"))
+    df = spark.read.parquet(pages_parquet)
+    run_extraction(spark, df, f"{base}/auto", run_id="r1")
+    run_extraction(spark, df, f"{base}/fixed", run_id="r1", num_partitions=3)
+    floor = spark.sparkContext.defaultParallelism
+    assert _lineage_rows(f"{base}/auto") == floor
+    assert _lineage_rows(f"{base}/fixed") == 3
+    assert final_digest(spark, f"{base}/auto") == \
+        final_digest(spark, f"{base}/fixed")
+    shutil.rmtree(base, ignore_errors=True)
+
+
+def test_unknown_input_size_gets_floor(spark, pages_sdf):
+    """createDataFrame and Python data source inputs report no size; a
+    projection over them must not turn the placeholder into a task count."""
+    from pdf_extract_spark.operators.extract import (decode_partitions,
+                                                     plan_bytes)
+    from pdf_extract_spark.sources.synth_pages import synth_pages
+
+    floor = spark.sparkContext.defaultParallelism
+    for df in (pages_sdf, synth_pages(spark, 40)):
+        assert plan_bytes(df.select("url", "html")) is None
+        assert decode_partitions(df) == floor
+
+
+def test_advisory_size_raises_decode_partitions(spark, pages_parquet,
+                                                tmp_path_factory):
+    """Below-input advisory partition size on a cloned session: the count
+    becomes ceil(input bytes / target), and the run commits that many."""
+    from pdf_extract_spark.operators.extract import (decode_partitions,
+                                                     plan_bytes)
+
+    cloned = spark.newSession()
+    df = cloned.read.parquet(pages_parquet)
+    size = plan_bytes(df.select("url", "warc_ts", "html", "lang"))
+    target = size // 12 + 1
+    cloned.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes",
+                    str(target))
+    n = -(-size // target)
+    assert n > spark.sparkContext.defaultParallelism
+    assert decode_partitions(df) == n
+    assert decode_partitions(spark.read.parquet(pages_parquet)) == \
+        spark.sparkContext.defaultParallelism  # caller's session unchanged
+    base = str(tmp_path_factory.mktemp("advparts"))
+    run_extraction(cloned, df, base, run_id="r1")
+    assert _lineage_rows(base) == n
+    shutil.rmtree(base, ignore_errors=True)
+
+
+def test_unreadable_committed_output_aborts_resume(spark, tmp_path_factory):
+    """Committed data that fails to read must abort the run: resuming as
+    if nothing were done would re-decode and append every committed url."""
+    import glob
+    import os as _os
+
+    base = str(tmp_path_factory.mktemp("badread"))
+    df = spark.createDataFrame(pages.make_rows(60), schema=pages.PAGES_SCHEMA)
+    run_extraction(spark, df, base, run_id="r1", num_partitions=2)
+    for path in glob.glob(f"{base}/extracted/run_id=r1/*/*.parquet"):
+        with open(path, "wb") as f:
+            f.write(b"not a parquet file")
+    with pytest.raises(Exception):
+        run_extraction(spark, df, base, run_id="r2", num_partitions=2)
+    assert not _os.path.exists(f"{base}/extracted/run_id=r2")
+    assert [n for n in _os.listdir(f"{base}/lineage")
+            if n.endswith(".parquet")] == ["run-r1.parquet"]
+    shutil.rmtree(base, ignore_errors=True)
+
+
 def test_crash_between_data_and_lineage_writes(spark, tmp_path_factory):
     """Run-level commit protocol: lineage is the commit marker. A run whose
     lineage never landed (crash window) is treated as uncommitted — its

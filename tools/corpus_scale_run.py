@@ -53,8 +53,7 @@ def main() -> None:
             shutil.rmtree(warm_dir, ignore_errors=True)
             run_corpus_prep(spark, warm_dir,
                             pages=synth_pages(spark, 1000,
-                                              partitions=args.cpus),
-                            num_partitions=args.cpus)
+                                              partitions=args.cpus))
             shutil.rmtree(warm_dir, ignore_errors=True)
 
         pages = spark.read.parquet(args.pages)
