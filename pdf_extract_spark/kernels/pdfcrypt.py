@@ -290,8 +290,10 @@ def _pad_pw(pw: bytes) -> bytes:
 def _alg2_file_key(pw: bytes, o: bytes, p: int, id0: bytes, r: int,
                    nbytes: int, encrypt_metadata: bool) -> bytes:
     """Algorithm 2: RC4/AESV2 file key from the user password."""
+    # P is a two's-complement 32-bit value that producers also write in
+    # its unsigned form (4294967252 for -44): both pack to the same bytes
     h = hashlib.md5(_pad_pw(pw) + o[:32]
-                    + struct.pack("<i", p) + id0)
+                    + struct.pack("<I", p & 0xFFFFFFFF) + id0)
     if r >= 4 and not encrypt_metadata:
         h.update(b"\xff\xff\xff\xff")
     key = h.digest()
@@ -410,7 +412,9 @@ class StandardDecryptor:
         return h.digest()[:min(len(self.key) + 5, 16)]
 
     def decrypt_stream(self, num: int, gen: int, data: bytes) -> bytes:
-        if self.cfm is None:
+        if self.cfm is None or not data:
+            # identity crypt filter, or a zero-length stream (/Length 0,
+            # no IV), which readers take as empty content
             return data
         if self.cfm == "rc4":
             return rc4(self._object_key(num, gen, False), data)
@@ -506,7 +510,8 @@ class FixtureEncryptor:
                     b"\x00" * 16, self.key)
             perms = aes_encrypt_block(
                 _expand_key(self.key),
-                struct.pack("<i", p) + b"\xff\xff\xff\xffTadbfixt")
+                struct.pack("<I", p & 0xFFFFFFFF)
+                + b"\xff\xff\xff\xffTadbfixt")
             self.o, self.u = o48, u48
             self.enc = (b"<< /Filter /Standard /V 5 /R " + str(r).encode()
                         + b" /Length 256 /P " + str(p).encode()

@@ -14,18 +14,28 @@ this is the corpus-scale equivalent over Common-Crawl-style pages):
     split        deterministic train/val/test + decontamination flags
     pack         fixed-budget sequence packing of the train split
 
-Stage-granular commit protocol (same discipline as plans/pipeline.py, at
-stage rather than run granularity): each stage writes its output in ONE
-dynamically-partitioned pass under ``<out>/stages/<name>/data/st={ok,
-err}`` (survivors / quarantine — a single write action, so the stage
-plan executes exactly once) and is COMMITTED only when its lineage row
-set — counts + order-insensitive digest — appears at
-``<out>/lineage/<name>.parquet`` via an atomic rename. On (re)start, any
-stage directory without its lineage file is a crashed partial write and
-is deleted wholesale; committed stages are never recomputed — a rerun
+Stage-granular commit protocol: the run-commit protocol of
+plans/pipeline.py (publish_marker / read_marker / sweep_marker_temps —
+the one implementation both jobs call), at stage rather than run
+granularity. Layout:
+
+    <out>/stages/<name>/data/st={ok,err}/  survivors / quarantine of ONE
+                                           write action, so the stage
+                                           plan executes exactly once
+    <out>/stages/pack/sequences/           the pack stage's table
+    <out>/lineage/<name>.parquet           the stage's commit marker, one
+                                           row: stage string, n_in long,
+                                           n_out long, n_quarantined long,
+                                           digest string, fmt long
+
+A stage is COMMITTED only when its marker (counts + order-insensitive
+digest + LINEAGE_FMT) appears via an atomic rename. On (re)start, any
+stage directory without its marker is a crashed partial write and is
+deleted wholesale; committed stages are never recomputed — a rerun
 after a kill converges to the byte-identical final corpus digest
 (test-gated in tests/test_corpus_job.py, including a kill between the
-data write and the commit marker, the worst crash point).
+data write and the commit marker, the worst crash point, and a torn
+marker).
 
 Production-hash discipline: the isolated registry queries pay sha256 per
 gram/paragraph so DuckDB can replay them value-exactly; this job is the
@@ -80,7 +90,8 @@ from pyspark.sql.window import Window
 from ..operators.extract import decode_partitions, extract_text
 from ..queries.text_q import _NORM_PASSES
 from ..queries.pipeline_q import _PAT_EMAIL, _PAT_IP, _PAT_PHONE
-from .pipeline import _is_torn_parquet, _sum_digest
+from .pipeline import (publish_marker, read_marker, sum_digest,
+                       sweep_marker_temps)
 
 STAGES = ("extract", "clean", "gate", "classify", "dedup_para", "dedup_doc",
           "cut_spans", "split", "pack")
@@ -91,8 +102,6 @@ STAGES = ("extract", "clean", "gate", "classify", "dedup_para", "dedup_doc",
 # corpus where committed downstream tables saw different text).
 
 QUAR_SCHEMA = "url string, stage string, error string"
-LINEAGE_SCHEMA = ("stage string, n_in long, n_out long, n_quarantined long, "
-                  "digest string")
 
 # Lineage format version, stamped into every commit marker. Resume trusts
 # committed stage TABLES as-is, so a marker written by incompatible code
@@ -738,44 +747,14 @@ def _lineage_path(out_dir: str, stage: str) -> str:
     return os.path.join(out_dir, "lineage", f"{stage}.parquet")
 
 
-def _publish_stage_lineage(out_dir: str, stage: str, n_in: int, n_out: int,
-                           n_quar: int, digest: str) -> None:
-    """Atomic commit marker: one tiny parquet file, temp-write +
-    os.replace (POSIX-atomic rename; an Iceberg writer folds this into
-    the table transaction — see plans/pipeline.IcebergRunWriter)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tab = pa.table({
-        "stage": [stage],
-        "n_in": [int(n_in)], "n_out": [int(n_out)],
-        "n_quarantined": [int(n_quar)], "digest": [digest],
-        "fmt": [LINEAGE_FMT],
-    })
-    os.makedirs(os.path.join(out_dir, "lineage"), exist_ok=True)
-    tmp = os.path.join(out_dir, f"_lineage_tmp_{stage}.parquet")
-    pq.write_table(tab, tmp)
-    os.replace(tmp, _lineage_path(out_dir, stage))
-
-
 def _read_stage_lineage(out_dir: str, stage: str) -> dict | None:
-    """None if the stage is uncommitted. A torn lineage file (crash inside
-    the publish itself) is removed — its stage is uncommitted by
-    definition; an unreadable-but-not-provably-torn file aborts (same
-    refusal discipline as plans/pipeline._committed_run_ids)."""
+    """The stage's committed lineage row, or None if the stage is
+    uncommitted (plans/pipeline.read_marker: a torn marker is removed, an
+    unreadable one that looks complete aborts the resume)."""
     path = _lineage_path(out_dir, stage)
-    if not os.path.exists(path):
+    t = read_marker(path)
+    if t is None:
         return None
-    import pyarrow.parquet as pq
-    try:
-        t = pq.read_table(path)
-    except Exception as e:
-        if _is_torn_parquet(path):
-            os.remove(path)
-            return None
-        raise RuntimeError(
-            f"stage lineage {path} unreadable but not provably torn "
-            f"({e!r}); refusing to resume") from e
     lin = {k: t.column(k)[0].as_py() for k in t.column_names}
     fmt = lin.get("fmt")
     if fmt != LINEAGE_FMT:
@@ -791,29 +770,16 @@ def _read_stage_lineage(out_dir: str, stage: str) -> dict | None:
     return lin
 
 
-def _docs_count_digest(spark: SparkSession, docs_dir: str) -> tuple[int, str]:
-    """(row count, order-insensitive digest) over (url, text_sha) in ONE
-    column-pruned re-read of the rows just committed (2 thin columns; the
-    full text is scanned exactly once, by the stage that wrote it)."""
-    df = spark.read.parquet(docs_dir).select("url", "text_sha")
-    row = df.agg(
-        F.count("*").alias("n"),
-        _sum_digest(
-            "sha2(concat_ws('|', url, coalesce(text_sha, '0')), 256)")
-        .alias("d")).collect()[0]
-    return row["n"], row["d"]
+# Per-row digest input of each committed table: docs by (url, text_sha),
+# the pack stage's sequence map by all four of its columns.
+_DOCS_ROW = "sha2(concat_ws('|', url, coalesce(text_sha, '0')), 256)"
+_SEQ_ROW = "sha2(concat_ws('|', seq_id, url, tok_begin, tok_end), 256)"
+_COUNTS = ("n_in", "n_out", "n_quarantined", "digest")
 
 
 def _empty_quarantine(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([], QUAR_SCHEMA)
 
-
-# On-disk stage layout (LINEAGE_FMT 2): ONE dynamically-partitioned write
-# per stage under <stage>/data/st={ok,err} — surviving docs are the ok
-# partition, quarantine rows the err partition. The previous layout
-# (<stage>/{docs,quarantine}) wrote the two legs as two separate ACTIONS,
-# so every stage recomputed its full plan twice (the extract decode, the
-# clean regex passes, the classify fit+predict all ran 2x per job).
 
 def _stage_docs_dir(out_dir: str, stage: str) -> str:
     return os.path.join(_stage_dir(out_dir, stage), "data", "st=ok")
@@ -821,6 +787,31 @@ def _stage_docs_dir(out_dir: str, stage: str) -> str:
 
 def _quarantine_dir(out_dir: str, stage: str) -> str:
     return os.path.join(_stage_dir(out_dir, stage), "data", "st=err")
+
+
+# The docs stages that are one transform of the previous stage's
+# committed docs, each to its staged table: the stage's doc columns plus
+# a nullable ``error`` column (null = survivor, else the quarantine
+# reason). extract, dedup_doc and pack are built in run_corpus_prep.
+_DOC_STAGES = {
+    "clean": lambda d: clean_docs(d).withColumn(
+        "error", F.when(F.length("text") == 0,
+                        F.lit("empty_after_normalize"))),
+    "gate": lambda d: gate_docs(d).select(
+        "url", "warc_ts", "lang", "doc_kind", "text", "text_sha", "n_words",
+        "domain", F.col("reject_reason").alias("error")),
+    "classify": lambda d: classify_docs(d).select(
+        "url", "warc_ts", "lang", "text", "text_sha", "n_words", "domain",
+        F.when(~F.col("keep"), F.concat(F.lit("lang_mismatch:"),
+                                        F.col("pred_lang"))).alias("error")),
+    "dedup_para": lambda d: dedup_paragraphs(d).withColumn(
+        "error", F.when(F.col("n_kept") == 0,
+                        F.lit("all_paragraphs_duplicate"))),
+    "cut_spans": lambda d: cut_dup_spans(d).withColumn(
+        "error", F.when(F.length("text") == 0, F.lit("all_text_duplicate"))),
+    "split": lambda d: split_docs(d).withColumn(
+        "error", F.lit(None).cast("string")),
+}
 
 
 def run_corpus_prep(
@@ -867,43 +858,42 @@ def run_corpus_prep(
         sdir = _stage_dir(out_dir, stage)
         if os.path.isdir(sdir) and _read_stage_lineage(out_dir, stage) is None:
             shutil.rmtree(sdir, ignore_errors=True)
-    if os.path.isdir(out_dir):
-        for name in os.listdir(out_dir):
-            if name.startswith("_lineage_tmp_"):
-                os.remove(os.path.join(out_dir, name))
+    sweep_marker_temps(out_dir)
 
-    stats: dict = {"stages": {}}
-    prev_docs: DataFrame | None = None
-    prev_n: int = 0
-    t_stage = [time.monotonic()]  # per-stage wall clock (scaling forensics:
-    #                               which stage stops scaling names the
-    #                               bottleneck, tools/corpus_scale_run.py)
+    def commit(stage: str, table_dir: str, row: str, n_in: int | None,
+               n_quar: int) -> dict:
+        """Publish the stage's commit marker over the table just written
+        to ``table_dir``: its count and the order-insensitive digest of
+        ``row``, from ONE column-pruned re-read (the full text is scanned
+        exactly once, by the stage that wrote it). ``n_in=None`` derives
+        the input count as n_out + n_quarantined (the extract stage,
+        whose input would otherwise need a second full scan of the pages
+        table just to count it)."""
+        import pyarrow as pa
 
-    def _stamp(stage: str) -> None:
-        now = time.monotonic()
-        stats["stages"][stage]["wall_s"] = round(now - t_stage[0], 3)
-        t_stage[0] = now
+        if fail_after == stage:
+            raise CorpusJobInterrupted(stage)
+        r = spark.read.parquet(table_dir).agg(
+            F.count("*").alias("n"), sum_digest(row).alias("d")).collect()[0]
+        lin = {"n_in": r["n"] + n_quar if n_in is None else n_in,
+               "n_out": r["n"], "n_quarantined": n_quar, "digest": r["d"]}
+        publish_marker(pa.table({"stage": [stage],
+                                 **{k: [v] for k, v in lin.items()},
+                                 "fmt": [LINEAGE_FMT]}),
+                       out_dir, _lineage_path(out_dir, stage))
+        return lin
 
-    def _commit_docs_stage(stage: str, staged: DataFrame,
-                           n_in: int | None) -> tuple[DataFrame, int]:
-        """ONE-PASS stage commit: ``staged`` carries the stage's doc
-        columns plus a nullable ``error`` column (null = survivor), and
-        is written ONCE, dynamically partitioned on st=ok|err — so the
-        stage plan executes exactly once per job (previously ok and
-        quarantine were two separate write actions and every stage
-        recomputed its full plan twice). The task-local sort the dynamic
-        writer inserts is over a 2-value column — noise next to a second
-        full compute of the stage. Publishes lineage after the write
-        (the commit) and returns the READ-BACK ok docs (downstream
-        stages consume the committed table, decoupling their plans from
-        this stage's). ``n_in=None`` derives the input count as
-        n_out + n_quarantined (the extract stage, whose input would
-        otherwise need a second full scan of the pages table just to
-        count it)."""
-        data_dir = os.path.join(_stage_dir(out_dir, stage), "data")
+    def commit_docs(stage: str, staged: DataFrame,
+                    n_in: int | None) -> dict:
+        """ONE-PASS stage commit: ``staged`` (doc columns + ``error``) is
+        written ONCE, dynamically partitioned on st=ok|err, so the stage
+        plan executes exactly once per job; the task-local sort the
+        dynamic writer inserts is over a 2-value column. Then the marker
+        over the ok docs is published."""
         (staged.withColumn("st", F.when(F.col("error").isNull(),
                                         F.lit("ok")).otherwise(F.lit("err")))
-         .write.mode("overwrite").partitionBy("st").parquet(data_dir))
+         .write.mode("overwrite").partitionBy("st")
+         .parquet(os.path.join(_stage_dir(out_dir, stage), "data")))
         docs_dir = _stage_docs_dir(out_dir, stage)
         if not os.path.isdir(docs_dir):
             # every row quarantined: the ok partition was never created —
@@ -911,155 +901,63 @@ def run_corpus_prep(
             # LocalRelation, no recompute) so downstream reads stay typed
             (staged.drop("error").filter(F.lit(False))
              .write.mode("overwrite").parquet(docs_dir))
-        if fail_after == stage:
-            raise CorpusJobInterrupted(stage)
         qdir = _quarantine_dir(out_dir, stage)
         n_quar = (spark.read.parquet(qdir).count()
                   if os.path.isdir(qdir) else 0)
-        committed = spark.read.parquet(docs_dir).drop("error")
-        n_out, digest = _docs_count_digest(spark, docs_dir)
-        if n_in is None:
-            n_in = n_out + n_quar
-        _publish_stage_lineage(out_dir, stage, n_in, n_out, n_quar, digest)
-        stats["stages"][stage] = {
-            "status": "ran", "n_in": n_in, "n_out": n_out,
-            "n_quarantined": n_quar, "digest": digest}
-        _stamp(stage)
-        return committed, n_out
+        return commit(stage, docs_dir, _DOCS_ROW, n_in, n_quar)
 
-    def _skip(stage: str, lin: dict) -> tuple[DataFrame, int]:
-        stats["stages"][stage] = {**{k: lin[k] for k in
-                                     ("n_in", "n_out", "n_quarantined",
-                                      "digest")},
-                                  "status": "skipped"}
-        _stamp(stage)
-        docs_dir = _stage_docs_dir(out_dir, stage)
-        return spark.read.parquet(docs_dir).drop("error"), lin["n_out"]
-
-    # --- extract ---
-    lin = _read_stage_lineage(out_dir, "extract")
-    if lin is not None:
-        prev_docs, prev_n = _skip("extract", lin)
-    else:
-        if pages is None:
-            raise ValueError("extract stage uncommitted and pages=None")
-        ext = extract_text(pages, num_partitions=(
-            num_partitions or decode_partitions(pages)))
-        staged = ext.select("url", "warc_ts", "lang", "doc_kind", "text",
-                            F.col("text_sha256").alias("text_sha"), "error")
-        prev_docs, prev_n = _commit_docs_stage("extract", staged, n_in=None)
-
-    # --- clean ---
-    lin = _read_stage_lineage(out_dir, "clean")
-    if lin is not None:
-        prev_docs, prev_n = _skip("clean", lin)
-    else:
-        staged = clean_docs(prev_docs).withColumn(
-            "error", F.when(F.length("text") == 0,
-                            F.lit("empty_after_normalize")))
-        prev_docs, prev_n = _commit_docs_stage("clean", staged, prev_n)
-
-    # --- gate ---
-    lin = _read_stage_lineage(out_dir, "gate")
-    if lin is not None:
-        prev_docs, prev_n = _skip("gate", lin)
-    else:
-        staged = (gate_docs(prev_docs)
-                  .select("url", "warc_ts", "lang", "doc_kind", "text",
-                          "text_sha", "n_words", "domain",
-                          F.col("reject_reason").alias("error")))
-        prev_docs, prev_n = _commit_docs_stage("gate", staged, prev_n)
-
-    # --- classify (declared-vs-predicted language gate) ---
-    lin = _read_stage_lineage(out_dir, "classify")
-    if lin is not None:
-        prev_docs, prev_n = _skip("classify", lin)
-    else:
-        staged = (classify_docs(prev_docs)
-                  .select("url", "warc_ts", "lang", "text", "text_sha",
-                          "n_words", "domain",
-                          F.when(~F.col("keep"),
-                                 F.concat(F.lit("lang_mismatch:"),
-                                          F.col("pred_lang")))
-                          .alias("error")))
-        prev_docs, prev_n = _commit_docs_stage("classify", staged, prev_n)
-
-    # --- dedup_para ---
-    lin = _read_stage_lineage(out_dir, "dedup_para")
-    if lin is not None:
-        prev_docs, prev_n = _skip("dedup_para", lin)
-    else:
-        staged = dedup_paragraphs(prev_docs).withColumn(
-            "error", F.when(F.col("n_kept") == 0,
-                            F.lit("all_paragraphs_duplicate")))
-        prev_docs, prev_n = _commit_docs_stage("dedup_para", staged, prev_n)
-
-    # --- dedup_doc ---
-    lin = _read_stage_lineage(out_dir, "dedup_doc")
-    if lin is not None:
-        prev_docs, prev_n = _skip("dedup_doc", lin)
-    else:
-        kept, dropped, cached = dedup_documents(prev_docs)
-        staged = (kept.withColumn("error", F.lit(None).cast("string"))
-                  .unionByName(dropped, allowMissingColumns=True))
-        try:
-            prev_docs, prev_n = _commit_docs_stage("dedup_doc", staged,
-                                                   prev_n)
-        finally:
-            # also on the fail_after crash-injection path / write errors:
-            # never leak a corpus-sized MEMORY_AND_DISK cache into a
-            # long-lived session
-            cached.unpersist()
-
-    # --- cut_spans (optional ExactSubstr excision, Lee et al. 2022) ---
-    if cut_spans:
-        lin = _read_stage_lineage(out_dir, "cut_spans")
+    stats: dict = {"stages": {}}
+    docs: DataFrame | None = None
+    n: int = 0
+    t_stage = time.monotonic()  # per-stage wall clock (scaling forensics:
+    #                             which stage stops scaling names the
+    #                             bottleneck, tools/corpus_scale_run.py)
+    for stage in STAGES:
+        if stage == "cut_spans" and not cut_spans:
+            continue
+        lin = _read_stage_lineage(out_dir, stage)
+        status = "ran" if lin is None else "skipped"
         if lin is not None:
-            prev_docs, prev_n = _skip("cut_spans", lin)
+            pass  # committed: its table is read back below
+        elif stage == "extract":
+            if pages is None:
+                raise ValueError("extract stage uncommitted and pages=None")
+            ext = extract_text(pages, num_partitions=(
+                num_partitions or decode_partitions(pages)))
+            lin = commit_docs(stage, ext.select(
+                "url", "warc_ts", "lang", "doc_kind", "text",
+                F.col("text_sha256").alias("text_sha"), "error"), n_in=None)
+        elif stage == "dedup_doc":
+            kept, dropped, cached = dedup_documents(docs)
+            try:
+                lin = commit_docs(stage, kept.withColumn(
+                    "error", F.lit(None).cast("string")).unionByName(
+                        dropped, allowMissingColumns=True), n)
+            finally:
+                # also on the fail_after crash-injection path / write
+                # errors: never leak a corpus-sized MEMORY_AND_DISK cache
+                # into a long-lived session
+                cached.unpersist()
+        elif stage == "pack":
+            seq_dir = os.path.join(_stage_dir(out_dir, stage), "sequences")
+            pack_train(docs, approx_n=n).write.mode("overwrite") \
+                .parquet(seq_dir)
+            lin = commit(stage, seq_dir, _SEQ_ROW, n, 0)
         else:
-            staged = cut_dup_spans(prev_docs).withColumn(
-                "error", F.when(F.length("text") == 0,
-                                F.lit("all_text_duplicate")))
-            prev_docs, prev_n = _commit_docs_stage("cut_spans", staged,
-                                                   prev_n)
+            lin = commit_docs(stage, _DOC_STAGES[stage](docs), n)
+        now = time.monotonic()
+        stats["stages"][stage] = {"status": status,
+                                  **{k: lin[k] for k in _COUNTS},
+                                  "wall_s": round(now - t_stage, 3)}
+        t_stage = now
+        if stage != "pack":  # pack's table is sequences, not docs
+            # downstream stages consume the committed table, decoupling
+            # their plans from this stage's
+            n = lin["n_out"]
+            docs = (spark.read.parquet(_stage_docs_dir(out_dir, stage))
+                    .drop("error"))
 
-    # --- split ---
-    lin = _read_stage_lineage(out_dir, "split")
-    if lin is not None:
-        prev_docs, prev_n = _skip("split", lin)
-    else:
-        staged = split_docs(prev_docs).withColumn(
-            "error", F.lit(None).cast("string"))
-        prev_docs, prev_n = _commit_docs_stage("split", staged, prev_n)
-
-    # --- pack (aux output table: sequences, not docs) ---
-    lin = _read_stage_lineage(out_dir, "pack")
-    if lin is not None:
-        stats["stages"]["pack"] = {
-            **{k: lin[k] for k in ("n_in", "n_out", "n_quarantined",
-                                   "digest")},
-            "status": "skipped"}
-        _stamp("pack")
-    else:
-        sdir = _stage_dir(out_dir, "pack")
-        seq_dir = os.path.join(sdir, "sequences")
-        pack_train(prev_docs, approx_n=prev_n) \
-            .write.mode("overwrite").parquet(seq_dir)
-        if fail_after == "pack":
-            raise CorpusJobInterrupted("pack")
-        committed = spark.read.parquet(seq_dir)
-        row = committed.agg(
-            F.count("*").alias("n"),
-            _sum_digest("sha2(concat_ws('|', seq_id, url, tok_begin,"
-                        " tok_end), 256)").alias("d")).collect()[0]
-        _publish_stage_lineage(out_dir, "pack", prev_n, row["n"], 0,
-                               row["d"])
-        stats["stages"]["pack"] = {
-            "status": "ran", "n_in": prev_n, "n_out": row["n"],
-            "n_quarantined": 0, "digest": row["d"]}
-        _stamp("pack")
-
-    stats["n_docs"] = prev_n
+    stats["n_docs"] = n
     stats["wall_s"] = round(time.monotonic() - t_job, 3)
     return stats
 

@@ -10,8 +10,12 @@ duplicates output and converges to the identical final table digest
 Single-pass layout (one decode pass, one data write — no persist, no
 second full-table action):
 
-    <out>/extracted/status={ok,err}/...   rows carry run_id + partition_id
-    <out>/lineage/                        one row per task partition per run
+    <out>/extracted/run_id=<id>/status={ok,err}/...
+                                          rows carry partition_id
+    <out>/lineage/run-<id>.parquet        one row per task partition:
+                                          run_id string, partition_id int,
+                                          n_in long, n_out long, n_err long,
+                                          digest string
 
 ok/err are directory partitions of ONE write (Catalyst routes rows by the
 status column), so the quarantine table (reference error_final analog,
@@ -32,19 +36,24 @@ footer magic intact) ABORTS the resume rather than risking deletion of
 committed data. Iceberg would make data+lineage one transaction; this
 protocol is the parquet equivalent at run granularity, tested including a
 torn-parquet-file crash.
+
+This module owns the commit-marker protocol for both resumable jobs:
+publish_marker, read_marker and sweep_marker_temps are the only code
+that publishes, reads (and judges torn) or sweeps a marker, here per run
+and in plans/corpus.py per stage.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from urllib.parse import quote, unquote
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.extract import decode_partitions, extract_text
 
-LINEAGE_SCHEMA = ("run_id string, partition_id int, n_in long, n_out long, "
-                  "n_err long, digest string")
+_MARKER_TMP = "_lineage_tmp_"
 
 
 def _is_torn_parquet(path: str) -> bool:
@@ -63,38 +72,68 @@ def _is_torn_parquet(path: str) -> bool:
         return False
 
 
-def _committed_run_ids(spark: SparkSession, lineage_dir: str) -> set[str]:
-    """Runs whose lineage exists are committed: lineage is the LAST write
-    of a run, so its presence proves the data write completed.
+def publish_marker(tab: "pyarrow.Table", out_dir: str, path: str) -> None:
+    """Atomically publish ``tab`` as the commit marker ``path``.
 
-    Read file-by-file: a torn lineage file belongs to a run that crashed
-    DURING its lineage write (still uncommitted) — it must not poison the
-    whole-directory read, or every committed run would look uncommitted
-    and be wrongly deleted. Only files that provably lack the parquet
-    footer magic are treated as torn and removed; any other read failure
-    (transient I/O, environment) aborts the resume instead — wrongly
-    deleting a committed run's lineage would cascade into
-    _cleanup_uncommitted rmtree-ing its DATA."""
-    if not os.path.isdir(lineage_dir):
-        return set()
+    The marker's presence commits a run or stage, so it must appear
+    atomically: a multi-file Spark append under committer v2 can crash
+    having committed a subset of part files, making the run look
+    committed while its audit counters are permanently under-reported.
+    Markers are tiny, so they are written on the driver as ONE parquet
+    file to a temp name in ``out_dir`` (same filesystem) and os.replace'd
+    into place — the POSIX-atomic rename; on S3/HDFS the same role is
+    played by an atomic PUT / create-then-rename, and an Iceberg writer
+    would fold this into the table transaction."""
     import pyarrow.parquet as pq
 
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = os.path.join(out_dir, _MARKER_TMP + os.path.basename(path))
+    pq.write_table(tab, tmp)
+    os.replace(tmp, path)
+
+
+def read_marker(path: str) -> "pyarrow.Table | None":
+    """The marker at ``path``, or None when it is uncommitted: missing, or
+    torn (no PAR1 footer — a crash inside publish_marker), in which case
+    it is removed. Any other read failure (transient I/O, environment)
+    aborts the resume instead: a wrong 'uncommitted' verdict would make
+    the caller delete the committed data the marker stands for."""
+    if not os.path.exists(path):
+        return None
+    import pyarrow.parquet as pq
+
+    try:
+        return pq.read_table(path)
+    except Exception as e:
+        if _is_torn_parquet(path):
+            os.remove(path)
+            return None
+        raise RuntimeError(
+            f"lineage marker {path} is unreadable but not provably torn "
+            f"({e!r}); refusing to resume — a wrong 'uncommitted' "
+            "verdict here would delete committed data") from e
+
+
+def sweep_marker_temps(out_dir: str) -> None:
+    """Remove marker temp files orphaned by a crash inside publish_marker
+    (written but never renamed — their run or stage is uncommitted by
+    definition)."""
+    for name in os.listdir(out_dir) if os.path.isdir(out_dir) else []:
+        if name.startswith(_MARKER_TMP):
+            os.remove(os.path.join(out_dir, name))
+
+
+def _committed_run_ids(lineage_dir: str) -> set[str]:
+    """Runs whose lineage exists are committed: lineage is the LAST write
+    of a run, so its presence proves the data write completed. Read
+    file-by-file, so a torn marker of a run that crashed DURING its
+    lineage write cannot poison the read of the committed ones."""
     committed: set[str] = set()
-    for name in sorted(os.listdir(lineage_dir)):
-        if not name.endswith(".parquet"):
-            continue
-        path = os.path.join(lineage_dir, name)
-        try:
-            col = pq.read_table(path, columns=["run_id"]).column("run_id")
-            committed.update(col.to_pylist())
-        except Exception as e:
-            if _is_torn_parquet(path):
-                os.remove(path)  # torn file from a crashed lineage write
-                continue
-            raise RuntimeError(
-                f"lineage file {path} is unreadable but not provably torn "
-                f"({e!r}); refusing to resume — a wrong 'uncommitted' "
-                "verdict here would delete committed data") from e
+    names = os.listdir(lineage_dir) if os.path.isdir(lineage_dir) else []
+    for name in sorted(n for n in names if n.endswith(".parquet")):
+        tab = read_marker(os.path.join(lineage_dir, name))
+        if tab is not None:
+            committed.update(tab.column("run_id").to_pylist())
     return committed
 
 
@@ -107,8 +146,6 @@ def _cleanup_uncommitted(extracted_dir: str, committed: set[str]) -> list[str]:
     without touching committed data. (Local-FS listing here; on a real
     cluster this is the same operation through the Hadoop FS API, and an
     Iceberg writer would make the whole run one transaction instead.)"""
-    from urllib.parse import unquote
-
     removed = []
     if not os.path.isdir(extracted_dir):
         return removed
@@ -148,7 +185,9 @@ def _read_urls(spark: SparkSession, d: str) -> DataFrame | None:
 _MOD_2_60 = str(1 << 60)
 
 
-def _sum_digest(row_hex_expr: str) -> F.Column:
+def sum_digest(row_hex_expr: str) -> F.Column:
+    """The order-insensitive checksum above, as an aggregate over the
+    per-row hex digest SQL expression ``row_hex_expr``."""
     return F.expr(
         f"lpad(hex(CAST(pmod(SUM(CAST(conv(substring({row_hex_expr}, 1, 15),"
         f" 16, 10) AS DECIMAL(38,0))), CAST({_MOD_2_60} AS DECIMAL(38,0)))"
@@ -165,39 +204,11 @@ def lineage_rows(extracted: DataFrame, run_id: str) -> DataFrame:
             F.count("*").alias("n_in"),
             F.count("text_sha256").alias("n_out"),
             F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("n_err"),
-            _sum_digest("coalesce(text_sha256, '0')").alias("digest"),
+            sum_digest("coalesce(text_sha256, '0')").alias("digest"),
         )
         .select(F.lit(run_id).alias("run_id"), "partition_id",
                 "n_in", "n_out", "n_err", "digest")
     )
-
-
-def _publish_lineage(lineage: DataFrame, out_dir: str, lineage_dir: str,
-                     run_id: str) -> "pyarrow.Table":
-    """Atomically publish a run's lineage as ONE parquet file and return
-    the published rows as the Arrow table (callers derive run counters
-    from it without another Spark job).
-
-    Lineage presence is the run's commit marker, so the marker itself must
-    appear atomically: a multi-file Spark append under committer v2 can
-    crash having committed a subset of part files, making the run look
-    committed while its audit counters are permanently under-reported.
-    Lineage is tiny (one row per task partition), so it is collected to the
-    driver as Arrow, written to a temp file on the same filesystem, and
-    os.replace'd into place — the POSIX-atomic rename; on S3/HDFS the same
-    role is played by an atomic PUT / create-then-rename, and an Iceberg
-    writer would fold this into the table transaction."""
-    from urllib.parse import quote
-
-    import pyarrow.parquet as pq
-
-    tab = lineage.toArrow()
-    os.makedirs(lineage_dir, exist_ok=True)
-    safe = quote(run_id, safe="")
-    tmp = os.path.join(out_dir, f"_lineage_tmp_{safe}.parquet")
-    pq.write_table(tab, tmp)
-    os.replace(tmp, os.path.join(lineage_dir, f"run-{safe}.parquet"))
-    return tab
 
 
 class ParquetRunWriter:
@@ -276,13 +287,9 @@ def run_extraction(
         writer = ParquetRunWriter(extracted_dir)
 
     # run-level commit protocol: drop data from runs that crashed before
-    # their lineage (= commit marker) was written, and sweep lineage temp
-    # files orphaned by a crash inside _publish_lineage itself (written
-    # but never renamed — their runs are uncommitted by definition)
-    for name in os.listdir(out_dir) if os.path.isdir(out_dir) else []:
-        if name.startswith("_lineage_tmp_"):
-            os.remove(os.path.join(out_dir, name))
-    committed = _committed_run_ids(spark, lineage_dir)
+    # their lineage (= commit marker) was written
+    sweep_marker_temps(out_dir)
+    committed = _committed_run_ids(lineage_dir)
     _cleanup_uncommitted(extracted_dir, committed)
     if run_id in committed:
         # re-using a committed run_id would re-append its lineage rows and
@@ -331,8 +338,9 @@ def run_extraction(
     staged = (lineage_spark.read.parquet(extracted_dir)
               .filter(F.col("run_id") == run_id)
               .select("partition_id", "text_sha256", "error"))
-    tab = _publish_lineage(lineage_rows(staged, run_id), out_dir,
-                           lineage_dir, run_id)
+    tab = lineage_rows(staged, run_id).toArrow()
+    publish_marker(tab, out_dir, os.path.join(
+        lineage_dir, f"run-{quote(run_id, safe='')}.parquet"))
 
     # run counters from the just-published lineage table (same rows that
     # landed in the commit marker — no extra Spark job)
@@ -360,6 +368,6 @@ def final_digest(spark: SparkSession, out_dir: str) -> str:
     modular sum over per-row sha256(url|text_sha256) — O(1) agg state,
     same construction as the lineage checksum."""
     row = extracted_ok(spark, out_dir).agg(
-        _sum_digest("sha2(concat_ws('|', url, text_sha256), 256)")
+        sum_digest("sha2(concat_ws('|', url, text_sha256), 256)")
         .alias("d")).collect()[0]
     return row["d"]

@@ -272,6 +272,54 @@ def test_rerun_of_complete_job_is_all_skips(spark, job):
     assert all(s["status"] == "skipped" for s in stats["stages"].values())
 
 
+def _tear(path):
+    """Truncate a parquet file to a prefix: no PAR1 footer, as a crash
+    inside the marker publish leaves it."""
+    with open(path, "rb") as f:
+        head = f.read()[:50]
+    with open(path, "wb") as f:
+        f.write(head)
+
+
+def test_torn_stage_marker_removed_and_stage_reruns(spark, tmp_path, job):
+    """A torn stage commit marker means the stage never committed: it is
+    removed, only that stage re-runs, and the job converges to the same
+    digest as the uninterrupted run."""
+    import shutil
+
+    out_ref, _ = job
+    out = str(tmp_path / "tornstage")
+    shutil.copytree(out_ref, out)
+    marker = os.path.join(out, "lineage", "split.parquet")
+    _tear(marker)
+    stats = run_corpus_prep(spark, out, pages=None, num_partitions=16)
+    assert stats["stages"]["split"]["status"] == "ran"
+    assert all(s["status"] == "skipped"
+               for name, s in stats["stages"].items() if name != "split")
+    assert job_digest(out) == job_digest(out_ref)
+
+
+def test_unreadable_stage_marker_aborts_resume(spark, tmp_path, job):
+    """A stage marker that fails to read while looking complete (PAR1
+    footer magic intact) aborts the resume and leaves the stage's data in
+    place: deleting it on a wrong 'uncommitted' verdict would lose
+    committed work."""
+    import shutil
+
+    out_ref, _ = job
+    out = str(tmp_path / "oddstage")
+    shutil.copytree(out_ref, out)
+    marker = os.path.join(out, "lineage", "gate.parquet")
+    with open(marker, "rb") as f:
+        head = f.read()[:50]
+    with open(marker, "wb") as f:
+        f.write(head + b"\x00" * 20 + b"PAR1")
+    with pytest.raises(RuntimeError, match="refusing to resume"):
+        run_corpus_prep(spark, out, pages=None, num_partitions=16)
+    assert os.path.exists(marker)
+    assert os.path.isdir(os.path.join(out, "stages", "gate", "data"))
+
+
 def test_export_jsonl_roundtrip(job, spark, tmp_path):
     """The JSONL export must hold exactly the train-split documents,
     readable back by any JSON-lines consumer, gzip'd executor-side."""

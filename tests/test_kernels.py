@@ -416,6 +416,43 @@ def test_pdf_encrypted_taxonomy():
     assert extract_pdf_text(iv_hit)[0] == "secret line"
 
 
+def test_pdf_encrypted_unsigned_p():
+    """/P written in its unsigned 32-bit form (4294967252 for -44), as
+    many producers do, derives the same Algorithm 2 file key as the
+    signed form: readers treat P as a two's-complement 32-bit value."""
+    import re
+
+    pgs = [pdf_writer.page_ops_simple(["secret line"])]
+    for mode in ("rc4-40", "rc4-128", "aesv2"):
+        enc = pdf_writer.build_pdf2(pgs, encrypt=mode)
+        # same-length patch keeps xref offsets valid: dropping the spaces
+        # before names makes room for the wider number
+        m = re.search(rb"<< /Filter /Standard .*?/P -44 ", enc)
+        wide = (m.group(0).replace(b" /", b"/")
+                .replace(b"/P -44 ", b"/P 4294967252"))
+        assert len(wide) <= len(m.group(0))
+        unsigned = enc[:m.start()] + wide.ljust(len(m.group(0))) \
+            + enc[m.end():]
+        assert b"/P 4294967252" in unsigned
+        assert extract_pdf_text(unsigned) == ("secret line", None), mode
+
+
+def test_pdf_encrypted_empty_aes_stream():
+    """A zero-length AES stream (/Length 0, no IV) is empty content, as
+    readers take it, not a malformed document: the text of the other
+    pages still extracts."""
+    import re
+
+    pgs = [pdf_writer.page_ops_simple(["secret line"]), []]
+    enc = pdf_writer.build_pdf2(pgs, encrypt="aesv2")
+    # the empty page's content stream ciphers to IV + one padding block;
+    # same-length patch to a zero-length stream keeps xref offsets valid
+    m = re.search(rb"/Length 32 >>\nstream\n.{32}\nendstream", enc, re.S)
+    empty = b"/Length 0 >>\nstream\n\nendstream"
+    pdf = enc[:m.start()] + empty.ljust(len(m.group(0))) + enc[m.end():]
+    assert extract_pdf_text(pdf) == ("secret line", None)
+
+
 def test_pdf_literal_string_escapes():
     """_parse_value unescapes literal strings at the byte level (octal,
     named escapes, line continuations) — required for /O //U key
